@@ -26,7 +26,8 @@ import graft.convert.AvroToParquetJob
   *                              all-string fallback quirks)
   *   --once                     run a single batch and exit (the
   *                              continuous loop is the default, like the
-  *                              reference's streaming pipeline)
+  *                              reference's streaming pipeline; it prints
+  *                              each poll's report line as the poll ends)
   *   --max_iterations <n>       stop after n polls (testing)
   *
   * Catalog mode (no conversion — query the landing zone in place):
@@ -95,7 +96,7 @@ object Convert {
       } else {
         val maxIter = opts.get("max_iterations").map(_.toInt).getOrElse(Int.MaxValue)
         AvroToParquetJob.runContinuous(spark, input, output, ledger, interval,
-          mode, maxIter, ledgerShards = ledgerShards).foreach(report)
+          mode, maxIter, ledgerShards = ledgerShards, onReport = report)
       }
     } finally spark.stop()
   }

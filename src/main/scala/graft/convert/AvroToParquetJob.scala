@@ -75,15 +75,28 @@ object AvroToParquetJob {
       ledgerDir: Option[String] = None,
       ingestionDate: Option[String] = None,
       audit: Option[String => Unit] = None,
-      ledgerShards: Int = 1): ConvertReport = {
+      ledgerShards: Int = 1): ConvertReport =
+    poll(spark, inputPattern, outputPrefix, mode,
+      ledgerDir.map(d =>
+        new FileLedger(d, spark.sparkContext.hadoopConfiguration, ledgerShards)),
+      ingestionDate, audit)
 
-    val ledger = ledgerDir.map(d =>
-      new FileLedger(d, spark.sparkContext.hadoopConfiguration, ledgerShards))
+  /** One [[runOnce]] batch against an already-open ledger, so the
+    * continuous loop opens (and layout-checks) its ledger once, not per poll.
+    */
+  private def poll(
+      spark: SparkSession,
+      inputPattern: String,
+      outputPrefix: String,
+      mode: ConvertMode,
+      ledger: Option[FileLedger],
+      ingestionDate: Option[String],
+      audit: Option[String => Unit]): ConvertReport = {
     val all = discover(spark, inputPattern)
-    // shard-filtered membership: only the shards this poll's discovery
-    // touches are read, one at a time — at millions of ledgered files the
-    // per-poll driver load is candidates + ONE shard's seen-set, not the
-    // full history Set (FileLedger.filterUnseen)
+    // streamed membership: only the shards this poll's discovery touches
+    // are read, and no seen-set is built — at millions of ledgered files
+    // the per-poll driver load is the candidate list, not the history
+    // (FileLedger.filterUnseen)
     val paths = ledger.map(_.filterUnseen(all)).getOrElse(all)
     if (paths.isEmpty) return ConvertReport(0, Nil, Nil, Nil)
 
@@ -145,12 +158,14 @@ object AvroToParquetJob {
               case e: Throwable if hasConversionCause(e) =>
                 // a HARD conversion error (reference main.py's strict
                 // casts) failed the write job — the v1 committer discards
-                // the aborted job's files, so the output holds NO rows
-                // from this group yet. Fall back to probe-and-rewrite:
-                // decode+convert each file (the reference's own
-                // double-read), isolate the failing files, and re-write
-                // only the clean ones — whole-file atomic failure
-                // restored at a cost bounded by the failure rate.
+                // the aborted job's files, and a straggler task of it can
+                // only commit into that job's own attempt dir (see write),
+                // so the output holds NO rows from this group, now or
+                // later. Fall back to probe-and-rewrite: decode+convert
+                // each file (the reference's own double-read), isolate
+                // the failing files, and re-write only the clean ones —
+                // whole-file atomic failure restored at a cost bounded by
+                // the failure rate.
                 val statuses =
                   AvroCdcReader.probe(spark, groupPaths, flat, mode)
                 val ok = statuses.collect { case AvroCdcReader.FileOk(p) => p }
@@ -265,6 +280,16 @@ object AvroToParquetJob {
     false
   }
 
+  /** Every write commits through its own job-attempt directory,
+    * `<prefix>/<folder>/_temporary/<attempt>/`. With the Hadoop default
+    * (attempt 0) all appends to a folder share one directory, so a task of
+    * an aborted write (the failed optimistic pass before probe-and-rewrite,
+    * or a crashed driver's last poll) that commits after the abort's
+    * cleanup would be merged — its rows published — by the next write's
+    * job commit. A random attempt id per write keeps such a straggler's
+    * output out of every other commit; the next job commit's cleanup
+    * deletes it with the rest of `_temporary`.
+    */
   private def write(
       df: DataFrame, outputPrefix: String, folder: String,
       ingestionDate: String): Unit = {
@@ -272,6 +297,8 @@ object AvroToParquetJob {
       .drop(AvroCdcReader.InputPathCol)
       .write
       .mode("append")
+      .option("mapreduce.job.application.attempt.id",
+        java.util.concurrent.ThreadLocalRandom.current().nextInt(1, Int.MaxValue).toString)
       .partitionBy("ingestion_date")
       .option("compression", "snappy")
       .parquet(s"$outputPrefix/$folder")
@@ -285,13 +312,16 @@ object AvroToParquetJob {
     * Discovery at 100× file count: `globStatus` is one driver-side listing
     * per poll — at millions of landing-zone files, split the deployment by
     * prefix (one `runContinuous` per source-folder glob, each with its own
-    * ledger dir), which bounds BOTH the listing and the ledger per worker;
-    * `ledgerShards` additionally caps per-POLL driver memory: membership
-    * runs through [[FileLedger.filterUnseen]], which reads only the shards
-    * this poll's candidates touch, ONE at a time, so the full seen-history
-    * Set is never resident (and compaction rewrites 1/n of history). The
-    * [[runStreaming]] path scales further still (incremental checkpoint
-    * log, no full listing diff).
+    * ledger dir), which bounds BOTH the listing and the ledger per worker.
+    * Membership runs through [[FileLedger.filterUnseen]], which streams
+    * only the shards this poll's candidates touch and never builds a
+    * seen-set, so per-poll driver memory is the candidate list;
+    * `ledgerShards` bounds what compaction rewrites (1/n of history) and
+    * how much of it each poll reads. The [[runStreaming]] path scales
+    * further still (incremental checkpoint log, no full listing diff).
+    *
+    * `onReport` receives each poll's report as the poll ends (after its
+    * ledger compaction), in poll order — the same reports the loop returns.
     *
     * Driver heap at production duration: Spark's AppStatusStore retains
     * job/stage/task wrappers and SQL-execution plan graphs up to its
@@ -312,17 +342,20 @@ object AvroToParquetJob {
       mode: ConvertMode = ConvertMode.Standard,
       maxIterations: Int = Int.MaxValue,
       shouldStop: () => Boolean = () => false,
-      ledgerShards: Int = 1): Seq[ConvertReport] = {
+      ledgerShards: Int = 1,
+      onReport: ConvertReport => Unit = _ => ()): Seq[ConvertReport] = {
     var reports = Vector.empty[ConvertReport]
     val ledger = new FileLedger(
       ledgerDir, spark.sparkContext.hadoopConfiguration, ledgerShards)
     var i = 0
     while (i < maxIterations && !shouldStop()) {
-      reports :+= runOnce(spark, inputPattern, outputPrefix, mode,
-        Some(ledgerDir), ledgerShards = ledgerShards)
+      val report = poll(spark, inputPattern, outputPrefix, mode, Some(ledger),
+        ingestionDate = None, audit = None)
       // fold accumulated per-poll batch files back into one past 64: a
       // year of 30s polls is ~1M ledger files otherwise (see FileLedger)
       ledger.compact()
+      reports :+= report
+      onReport(report)
       i += 1
       if (i < maxIterations && !shouldStop()) Thread.sleep(intervalSeconds * 1000L)
     }

@@ -19,26 +19,29 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * only; reads union all batch files; [[compact]] folds accumulated batch
   * files back into one. Works on any Hadoop filesystem.
   *
-  * Driver-memory bound: [[seen]] materializes every processed path in one
-  * driver-side Set — the same centralized-match semantics as the
-  * reference's `MatchContinuously` (and Structured Streaming's own
-  * file-source log, which also keeps seen entries on the driver). At
-  * ~100 bytes/path, 10M processed files ≈ 1 GB of driver heap: fine for
-  * the CDC landing-zone cadence this job targets (thousands of files/day
-  * for years), and the ceiling is file COUNT, not data volume — 100 TB in
-  * large Avro containers is millions of paths, not billions. Past that,
-  * the [[AvroToParquetJob.runStreaming]] path already scales further (its
-  * checkpoint log is read incrementally), so the ledger deliberately stays
-  * simple rather than re-implementing a partitioned state store.
+  * Driver-memory bound: per-poll membership ([[filterUnseen]]) streams the
+  * history line by line against the poll's candidates and never builds a
+  * seen-set, so its peak driver memory is the candidate list plus one read
+  * buffer, whatever the history size. Only [[seen]] / [[seenShard]] (tests,
+  * compaction, migration) materialize history in a driver-side Set — the
+  * same centralized-match semantics as the reference's `MatchContinuously`
+  * (and Structured Streaming's own file-source log, which also keeps seen
+  * entries on the driver). The per-poll CPU cost is one pass over the
+  * touched shards' bytes; the ceiling is file COUNT, not data volume —
+  * 100 TB in large Avro containers is millions of paths, not billions.
+  * Past that, the [[AvroToParquetJob.runStreaming]] path already scales
+  * further (its checkpoint log is read incrementally), so the ledger
+  * deliberately stays simple rather than re-implementing a partitioned
+  * state store.
   *
   * 100×-file-count story — HASH-PREFIX SHARDS: `shards = N` routes each
   * path to `shard-NN/` by a stable hash (`String.hashCode` is specified by
   * the JLS, so routing survives JVM restarts and mixed fleets). Every
   * shard is an independent mini-ledger with its own batch files and its
   * own [[compact]] cycle, which caps BOTH costs that grow with file count:
-  * the per-poll membership read can load one shard at a time
-  * ([[seenShard]] — peak driver memory divides by N), and compaction
-  * rewrites 1/N of the history instead of the whole set. The layout is
+  * the per-poll membership scan reads only the shards the poll's
+  * candidates route to, and compaction rewrites (and holds in memory) 1/N
+  * of the history instead of the whole set. The layout is
   * append-only per shard, so the crash-safety argument below is unchanged.
   * `shards = 1` (default) keeps the original flat layout byte-for-byte.
   * Reopening an existing ledger under a DIFFERENT shard count migrates
@@ -160,28 +163,33 @@ final class FileLedger(dir: String, conf: Configuration, shards: Int = 1) {
   def seen(): Set[String] =
     (0 until shards).iterator.map(seenShard).foldLeft(Set.empty[String])(_ ++ _)
 
-  /** Membership filter that exploits the shard layout: loads ONLY the
-    * shards this poll's candidate paths route to, one shard at a time, so
-    * peak driver memory is a single shard's seen-set (1/N of history) plus
-    * the candidates — never the full ledger — and shards no candidate
-    * touches are never opened. With `shards = 1` this degenerates to one
-    * full load, i.e. exactly the old `seen()` read. Order-preserving.
+  /** The candidates not yet in the ledger, in caller order (duplicates
+    * kept): exactly `paths.filterNot(p => seenShard(shardOf(p)).contains(p))`.
+    * Only the shards the candidates route to are read, and no seen-set is
+    * built: each shard's batch files stream past a matcher holding that
+    * shard's candidates as UTF-8 bytes, every history line naming a
+    * candidate drops it, and reading stops once none is left. Peak driver
+    * memory is the candidates plus one read buffer, not a shard's history.
     *
     * `onShardLoad` fires once per shard actually read (test/metrics hook:
-    * LedgerShardSpec asserts untouched shards stay unread).
+    * AvroToParquetJobSpec asserts untouched shards stay unread).
     */
   def filterUnseen(
       paths: Seq[String],
       onShardLoad: Int => Unit = _ => ()): Seq[String] = {
     if (paths.isEmpty) return paths
-    // kept holds only this poll's UNSEEN candidates (small); each shard's
-    // seen-set is dropped before the next shard loads
-    val kept = paths.groupBy(shardOf).iterator.flatMap { case (i, ps) =>
+    val seenHere = mutable.HashSet.empty[String]
+    paths.distinct.groupBy(shardOf).foreach { case (i, ps) =>
       onShardLoad(i)
-      val s = seenShard(i)
-      ps.iterator.filterNot(s.contains)
-    }.toSet
-    paths.filter(kept.contains)
+      val m = new FileLedger.CandidateMatcher(ps)
+      val files = batchFiles(i).iterator
+      while (m.remaining > 0 && files.hasNext) {
+        val in = fs.open(files.next().getPath)
+        try m.scan(in) finally in.close()
+      }
+      seenHere ++= m.matched
+    }
+    paths.filterNot(seenHere)
   }
 
   def add(paths: Seq[String]): Unit = {
@@ -239,4 +247,83 @@ final class FileLedger(dir: String, conf: Configuration, shards: Int = 1) {
         }
       }
     }.sum
+}
+
+object FileLedger {
+
+  /** Matches ledger lines, as raw UTF-8 bytes, against a fixed set of
+    * distinct candidate paths without decoding or allocating per line.
+    * A line is the bytes between `\n` / `\r` terminators (the split
+    * `getLines` makes); empty lines are skipped. A candidate whose UTF-8
+    * form does not decode back to itself (an unpaired surrogate) or is
+    * empty can never equal a decoded line, so it is never matched.
+    */
+  private[convert] final class CandidateMatcher(candidates: Seq[String]) {
+    private val names = candidates.toArray
+    private val bytes = names.map(_.getBytes(StandardCharsets.UTF_8))
+    private val hashes = bytes.map(b => hash(b, 0, b.length))
+    private val found = new Array[Boolean](names.length)
+    // open addressing, linear probing; slot holds candidate index + 1
+    private val mask = Integer.highestOneBit(math.max(names.length, 1) * 4 - 1) - 1
+    private val table = new Array[Int](mask + 1)
+    private var left = 0
+    names.indices.foreach { c =>
+      if (bytes(c).nonEmpty && new String(bytes(c), StandardCharsets.UTF_8) == names(c)) {
+        var s = hashes(c) & mask
+        while (table(s) != 0) s = (s + 1) & mask
+        table(s) = c + 1
+        left += 1
+      }
+    }
+
+    /** Candidates not yet matched (unmatchable ones excluded). */
+    def remaining: Int = left
+
+    def matched: Seq[String] = names.indices.filter(found(_)).map(names(_))
+
+    /** Reads `in` to its end, or until every candidate has matched. */
+    def scan(in: java.io.InputStream): Unit = {
+      var buf = new Array[Byte](1 << 16)
+      var len = 0 // valid bytes in buf; buf(0 until len) is one partial line on entry
+      var n = in.read(buf, 0, buf.length)
+      while (n > 0 && left > 0) {
+        var from = 0
+        var i = len
+        len += n
+        while (i < len && left > 0) {
+          val b = buf(i)
+          if (b == '\n' || b == '\r') { line(buf, from, i); from = i + 1 }
+          i += 1
+        }
+        len -= from
+        System.arraycopy(buf, from, buf, 0, len)
+        if (len == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+        n = if (left > 0) in.read(buf, len, buf.length - len) else -1
+      }
+      if (left > 0) line(buf, 0, len) // last line without a terminator
+    }
+
+    private def line(buf: Array[Byte], from: Int, to: Int): Unit =
+      if (to > from) {
+        val h = hash(buf, from, to)
+        var s = h & mask
+        while (table(s) != 0) {
+          val c = table(s) - 1
+          if (!found(c) && hashes(c) == h &&
+              java.util.Arrays.equals(buf, from, to, bytes(c), 0, bytes(c).length)) {
+            found(c) = true
+            left -= 1
+            return
+          }
+          s = (s + 1) & mask
+        }
+      }
+
+    private def hash(b: Array[Byte], from: Int, to: Int): Int = {
+      var h = 0
+      var i = from
+      while (i < to) { h = 31 * h + b(i); i += 1 }
+      h ^ (h >>> 16)
+    }
+  }
 }

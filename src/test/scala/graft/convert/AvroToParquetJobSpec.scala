@@ -596,4 +596,57 @@ class AvroToParquetJobSpec extends AnyFunSuite {
     assert(!AvroToParquetJob.hasConversionCause(
       new RuntimeException("plain read failure")))
   }
+
+  private def idRecord(id: Long) =
+    Map("uuid" -> s"u$id", "read_timestamp" -> 0L,
+      "source_metadata" -> AvroFixtures.sm("a"),
+      "payload" -> Map("id" -> id, "name" -> s"n$id"))
+
+  test("a write never publishes task output another job left under the " +
+    "folder's _temporary (aborted optimistic pass, crashed driver)") {
+    val in = tmpDir("graft-in-stale")
+    val out = tmpDir("graft-out-stale")
+    // parquet rows of this folder's schema, planted as a committed task of
+    // an earlier job attempt 0 — what a straggler of an aborted write leaves
+    val side = tmpDir("graft-in-stale-side")
+    AvroFixtures.writeAvro(s"$side/avro/a/stale.avro", AvroFixtures.BasicEnvelope,
+      Seq(idRecord(900L), idRecord(901L)))
+    val sideOut = tmpDir("graft-out-stale-side")
+    AvroToParquetJob.runOnce(spark, s"$side/avro/*/*.avro", sideOut,
+      ConvertMode.Standard, ingestionDate = Some("2024-06-01"))
+    val part = new File(s"$sideOut/a/ingestion_date=2024-06-01").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val task = new File(
+      s"$out/a/_temporary/0/task_202406010000_0001_m_000000/ingestion_date=2024-06-01")
+    assert(task.mkdirs())
+    Files.copy(part.toPath, new File(task, "part-99999-stale.snappy.parquet").toPath)
+
+    AvroFixtures.writeAvro(s"$in/avro/a/clean.avro", AvroFixtures.BasicEnvelope,
+      Seq(idRecord(1L), idRecord(2L)))
+    val rep = AvroToParquetJob.runOnce(spark, s"$in/avro/*/*.avro", out,
+      ConvertMode.Standard, ingestionDate = Some("2024-06-01"))
+    assert(rep.converted.size == 1 && rep.failed.isEmpty)
+    val ids = spark.read.parquet(s"$out/a").collect().map(_.getAs[Long]("id")).sorted
+    assert(ids.toSeq == Seq(1L, 2L), "stale task output was published")
+  }
+
+  test("runContinuous hands each poll's report to onReport as the poll " +
+    "ends, in poll order") {
+    val in = tmpDir("graft-in-onreport")
+    val out = tmpDir("graft-out-onreport")
+    val ledger = tmpDir("graft-ledger-onreport")
+    AvroFixtures.writeAvro(s"$in/avro/a/f0.avro", AvroFixtures.BasicEnvelope,
+      Seq(idRecord(0L)))
+    val got = scala.collection.mutable.ArrayBuffer[AvroToParquetJob.ConvertReport]()
+    // each callback lands the next file, so every poll converts a new one
+    val reports = AvroToParquetJob.runContinuous(spark, s"$in/avro/*/*.avro", out,
+      ledger, intervalSeconds = 0, maxIterations = 3, onReport = { r =>
+        got += r
+        AvroFixtures.writeAvro(s"$in/avro/a/f${got.size}.avro",
+          AvroFixtures.BasicEnvelope, Seq(idRecord(got.size.toLong)))
+      })
+    assert(got.toSeq == reports)
+    assert(got.map(_.converted.map(p => new File(p).getName)).toSeq ==
+      Seq(Seq("f0.avro"), Seq("f1.avro"), Seq("f2.avro")))
+  }
 }
